@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LeafNode, LogicalPlan, Union}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 
 /** Column-level lineage: for every output column of a DataFrame,
   * which (source, column) pairs feed its VALUE -- the governance /
@@ -66,12 +67,18 @@ object ColumnLineage {
     * under-attribute), folded to logical table dirs. */
   private def sourceNames(l: LeafNode): Set[String] = l match {
     case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation =>
-        val roots = fs.location.rootPaths.map(p => logicalRoot(p.toString))
-        if (roots.nonEmpty) roots.toSet else Set(lr.relation.toString)
+      case fs: HadoopFsRelation => roots(fs.location, lr.relation.toString)
       case other => Set(other.toString)
     }
+    // a versioned-store read: one v2 relation over the snapshot's files
+    case DataSourceV2Relation(ft: FileTable, _, _, _, _, _) =>
+      roots(ft.fileIndex, ft.name())
     case other => Set(other.nodeName)
+  }
+
+  private def roots(index: FileIndex, orElse: String): Set[String] = {
+    val rs = index.rootPaths.map(p => logicalRoot(p.toString))
+    if (rs.nonEmpty) rs.toSet else Set(orElse)
   }
 
   private def walk(p: LogicalPlan): Map[ExprId, Sources] = p match {

@@ -404,10 +404,10 @@ object LibraryQueries {
   /** S23: multi-column Z-order clustering through the versioned store
     * (the `OPTIMIZE ZORDER BY` shape): orders rewritten into Z-cells
     * over (o_orderkey, o_custkey), then a compound corner predicate
-    * reads back through [[VersionedTableStore.readWhereAll]] -- the
-    * manifest prunes cells whose per-cell min/max are disjoint on
-    * EITHER column before any file is listed, and the exact filter
-    * applies to the survivors. The oracle is the plain filtered
+    * filters a plain `read` -- the planned scan skips cells whose
+    * per-cell manifest min/max are disjoint on EITHER column before
+    * any file is read, and the exact filter applies to the
+    * survivors. The oracle is the plain filtered
     * select: if pruning ever dropped a cell that held matching rows
     * (the conservative guarantee broken), the hash gate fails. The
     * synthetic `__zbucket` is layout, not data, so it is dropped. */
@@ -419,8 +419,9 @@ object LibraryQueries {
       Files.createTempDirectory("graft-q-s23").toString)
     store.commitFull(o, "orders_z")
     store.clusterByZ("orders_z", Seq("o_orderkey", "o_custkey"), nBuckets = 64)
-    store.readWhereAll("orders_z",
-        Map("o_orderkey" -> ((0L, 7500L)), "o_custkey" -> ((0L, 180L))))
+    store.read("orders_z")
+      .filter(col("o_orderkey").between(0L, 7500L) &&
+        col("o_custkey").between(0L, 180L))
       .drop("__zbucket")
   }
 
@@ -1260,11 +1261,12 @@ object LibraryQueries {
     * table is partitioned by year, so the manifest's min/max on the
     * HASH-DISTRIBUTED order key covers every partition and prunes
     * nothing; buildBloomIndex writes one small sidecar bloom per
-    * partition, and each readPointIndexed consults the cached index
-    * to scan only the partitions that might hold the key (BloomIndex
-    * Spec pins the pruning via inputFiles; this gate pins the VALUES
-    * cross-engine — bloom false positives can only widen the scan,
-    * never change results, so the hash is deterministic). Half the
+    * partition, and each `read(...).filter(key === k)` scan consults
+    * the cached index to plan only the partitions that might hold the
+    * key (BloomIndexSpec pins the pruning on the planned scan's files;
+    * this gate pins the VALUES cross-engine — bloom false positives
+    * can only widen the scan, never change results, so the hash is
+    * deterministic). Half the
     * probed keys are absent: misses must return nothing, not error.
     * At 100 TB this is the takedown-service shape: thousands of point
     * lookups against a pinned snapshot amortize one index load into
@@ -1279,7 +1281,7 @@ object LibraryQueries {
     store.commitFull(o, "ord_i", Seq("order_yr"))
     store.buildBloomIndex("ord_i", "o_orderkey")
     val keys = Seq(1L, 7L, 32L, 999L, 4999L, 29995L, 57607L, 123456789L)
-    keys.map(k => store.readPointIndexed("ord_i", "o_orderkey", k))
+    keys.map(k => store.read("ord_i").filter(col("o_orderkey") === k))
       .reduce(_.unionByName(_))
       .select(col("o_orderkey"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"),

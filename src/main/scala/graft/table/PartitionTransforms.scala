@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, St
   *
   * Pruning needs NO transform awareness: the store's manifest stats
   * record per-rel min/max of the SOURCE column from the data itself,
-  * so `readWhere`/`readWhereDate` and the catalog's stats-pruned
-  * scans skip partitions exactly as they do for identity layouts —
+  * so a `read(...).filter(...)` on the source column and the catalog's
+  * `WHERE` skip partitions exactly as they do for identity layouts —
   * the transform's job is only to make partition boundaries ALIGN
   * with the query dimension.
   *

@@ -332,7 +332,10 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     * snapshots are not part of the table's history until published —
     * they are visible only through [[stagedSnapshots]] /
     * [[readStaged]] / [[readVersion]]. */
-  def versions(name: String): Seq[Long] = {
+  def versions(name: String): Seq[Long] = published(name).map(_.version)
+
+  /** Live published main-lineage manifests, ascending. */
+  private def published(name: String): Seq[Manifest] = {
     val dir = commitsPath(name)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
@@ -340,7 +343,6 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
       .sortBy(_.getPath.getName)
       .flatMap(st => readManifest(st.getPath))
       .filter(m => m.wap.isEmpty && m.branch.isEmpty)
-      .map(_.version)
   }
 
   private def manifestAt(name: String, v: Long): Option[Manifest] = {
@@ -387,62 +389,27 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     current(name).map(_.version)
       .getOrElse(throw new NoSuchElementException(s"no snapshots for $name"))
 
-  /** Current-snapshot scan. */
+  /** Current-snapshot scan. Every store read (this one, time travel,
+    * branches, tags, staged snapshots) is ONE scan over the snapshot's
+    * manifest-pinned file index, planned like a catalog read: filters
+    * on it skip work at plan time, with no typed reader needed —
+    *
+    *  - partition filters prune rels;
+    *  - comparisons of a column against literals drop every partition
+    *    whose recorded manifest [min, max] for it is disjoint
+    *    (integer-family stats numerically; DATE, TIMESTAMP and STRING
+    *    stats in Spark's own ordering), so `read(t).filter(col("k")
+    *    .between(lo, hi))` is the stats-pruned range scan;
+    *  - an equality on a column with a partition bloom index for the
+    *    snapshot ([[buildBloomIndex]]) scans only the partitions that
+    *    might hold the value.
+    *
+    * Rels without stats (or bloom) for a column always scan, so
+    * pruning never drops a matching row. `inputFiles` lists every file
+    * of the snapshot; the planned scan's file list is the pruned one. */
   def read(name: String): DataFrame =
     load(name, current(name)
       .getOrElse(throw new NoSuchElementException(s"no snapshots for $name")))
-
-  /** Range scan with manifest-stats data skipping: partitions whose
-    * recorded [min, max] for `column` is disjoint from [lo, hi] are
-    * dropped from the scan at PLAN time (zero file listing, zero
-    * tasks), then the exact filter applies to what remains -- the
-    * Iceberg scan-planning story. Partitions without stats for the
-    * column are always scanned (conservative), so readWhere is
-    * correct whether or not the commit recorded stats. Stats compare
-    * numerically; intended for integer-family columns. */
-  /** Manifest-stat partition prune shared by the range and point
-    * readers: keep only rels whose recorded [min, max] intersects
-    * [lo, hi]; rels without stats always scan (conservative). */
-  private def statsPruned(name: String, column: String, lo: Long,
-      hi: Long): DataFrame = {
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    // non-numeric stats (a date/string column someone recorded) fall
-    // back to "no stats" -- the scan stays conservative, never throws
-    val byRel = m.stats.filter(_._2 == column).flatMap { s =>
-      try Some(s._1 -> ((BigDecimal(s._3), BigDecimal(s._4))))
-      catch { case _: NumberFormatException => None }
-    }.toMap
-    val keep = m.mapping.filter { case (rel, _) =>
-      byRel.get(rel).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-    val df = load(name, m.copy(mapping = keep))
-    val dt = df.schema(column).dataType
-    require(Seq("byte", "short", "integer", "long").contains(dt.typeName),
-      s"readWhere needs an integer-family column; $column is ${dt.typeName}" +
-        " (ANSI mode would throw casting non-numeric values mid-scan)")
-    df
-  }
-
-  def readWhere(name: String, column: String, lo: Long, hi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    statsPruned(name, column, lo, hi)
-      .filter(col(column) >= lo && col(column) <= hi)
-  }
-
-  /** Point lookup: manifest-stat prune at [value, value] plus a
-    * pushed EQUALITY predicate -- deliberately `===`, not the
-    * [[readWhere]] range pair, because parquet bloom filters serve
-    * only equality: on a table committed through
-    * [[commitFullIndexed]] with a bloom on `column`, the reader
-    * skips every row group whose bloom excludes the value --
-    * file-level secondary-index latency without any clustering
-    * requirement on the key. */
-  def readPoint(name: String, column: String, value: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    statsPruned(name, column, value, value)
-      .filter(col(column) === lit(value))
-  }
 
   // ------------------------------------------- partition bloom index
 
@@ -464,12 +431,13 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     * collected), one `<urlbase64(rel)>.bf` file per rel under
     * `<table>/_bloom/<column>/v<head>/`, with a `_done` marker
     * written LAST so a crashed build is never half-read. The index
-    * pins the EXACT head version it was built at: after any new
-    * commit [[readPointIndexed]] silently falls back to the
-    * stats-pruned scan, so a stale index can never drop rows. Bloom
-    * false positives only ADD partitions to the scan; the pushed
-    * equality filter keeps results exact either way. Returns the
-    * number of rel blooms written. */
+    * pins the EXACT head version it was built at: reads of any later
+    * snapshot never consult it (they keep the stats-pruned scan), so a
+    * stale index can never drop rows. Bloom false positives only ADD
+    * partitions to the scan; the equality filter keeps results exact
+    * either way. Consulted by any read of that version filtered by
+    * `column === value` (see [[read]]). Returns the number of rel
+    * blooms written. */
   def buildBloomIndex(name: String, column: String,
       expectedPerRel: Long = 100000L, fpp: Double = 0.03): Int = {
     import org.apache.spark.sql.functions.{col, concat, concat_ws, lit}
@@ -481,7 +449,8 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     require(Seq("byte", "short", "integer", "long", "string").contains(dt),
       s"bloom index supports integer-family and string keys; $keyCol is $dt")
     // layout dimensions re-derived from their sources (hidden
-    // partition columns never leave load() — see PartitionTransforms)
+    // partition columns never reach a read's schema — see
+    // PartitionTransforms)
     val relExpr =
       if (m.partitionBy.isEmpty) lit(".")
       else concat_ws("/", PartitionTransforms.specs(m.partitionBy).map(sp =>
@@ -544,205 +513,27 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
         }.toMap)
     })
 
-  /** [[readPoint]] through the partition bloom index when one exists
-    * for the current head version; stats-pruned scan otherwise. A rel
-    * with no bloom (e.g. its keys were all null at build time) is
-    * scanned conservatively. */
-  def readPointIndexed(name: String, column: String,
-      value: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    bloomIndexFor(name, column, m.version) match {
-      case Some(idx) =>
-        val keep = m.mapping.filter { case (rel, _) =>
-          idx.get(rel).forall(_.mightContainLong(value)) }
-        load(name, m.copy(mapping = keep))
-          .filter(col(column) === lit(value))
-      case None => readPoint(name, column, value)
-    }
-  }
-
-  /** String-key twin of [[readPointIndexed]]. */
-  def readPointIndexedString(name: String, column: String,
-      value: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    bloomIndexFor(name, column, m.version) match {
-      case Some(idx) =>
-        val keep = m.mapping.filter { case (rel, _) =>
-          idx.get(rel).forall(_.mightContainString(value)) }
-        load(name, m.copy(mapping = keep))
-          .filter(col(column) === lit(value))
-      case None =>
-        load(name, m).filter(col(column) === lit(value))
-    }
-  }
-
-  /** Range scan with manifest-stats skipping on a DATE column -- the
-    * single most common prune predicate in a warehouse. Spark casts
-    * DATE to ISO `yyyy-MM-dd` strings when the commit records stats,
-    * and ISO dates order lexicographically exactly as they do
-    * chronologically, so the recorded string min/max compare against
-    * the bound directly -- no numeric parse, no ANSI cast hazard.
-    * Same conservative semantics as [[readWhere]]: a rel without
-    * stats for the column always scans. `lo`/`hi` are inclusive ISO
-    * dates. */
-  def readWhereDate(name: String, column: String, lo: String,
-      hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val iso = "\\d{4}-\\d{2}-\\d{2}"
-    require(lo.matches(iso) && hi.matches(iso),
-      s"readWhereDate bounds must be ISO yyyy-MM-dd, got [$lo, $hi]")
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    // non-ISO stat values (recorded from some other column type) fall
-    // back to "no stats": the scan stays conservative, never throws
-    val byRel = m.stats.filter(s => s._2 == column &&
-      s._3.matches(iso) && s._4.matches(iso))
-      .map(s => s._1 -> ((s._3, s._4))).toMap
-    val keep = m.mapping.filter { case (rel, _) =>
-      byRel.get(rel).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-    val df = load(name, m.copy(mapping = keep))
-    require(df.schema(column).dataType.typeName == "date",
-      s"readWhereDate needs a DATE column; $column is " +
-        df.schema(column).dataType.typeName)
-    df.filter(col(column) >= lit(lo).cast("date") &&
-      col(column) <= lit(hi).cast("date"))
-  }
-
-  /** Range scan with manifest-stats skipping on a TIMESTAMP column
-    * -- the reader a `days(ts)` hidden-partitioned event log wants:
-    * stats record the source timestamps as `yyyy-MM-dd HH:mm:ss...`
-    * strings (columnStats casts), whose lexicographic order IS
-    * chronological order for the fixed format, so rels outside
-    * [lo, hi] prune at plan time and the exact timestamp filter
-    * applies to the remainder. Bounds are inclusive
-    * `yyyy-MM-dd[ HH:mm:ss]` strings; a rel without stats always
-    * scans (conservative). */
-  def readWhereTimestamp(name: String, column: String, lo: String,
-      hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val form = "\\d{4}-\\d{2}-\\d{2}( \\d{2}:\\d{2}:\\d{2}.*)?"
-    require(lo.matches(form) && hi.matches(form),
-      s"readWhereTimestamp bounds must be yyyy-MM-dd[ HH:mm:ss], got " +
-        s"[$lo, $hi]")
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    val byRel = m.stats.filter(s => s._2 == column && s._3.matches(form) &&
-      s._4.matches(form)).map(s => s._1 -> ((s._3, s._4))).toMap
-    val keep = m.mapping.filter { case (rel, _) =>
-      // a bare-date hi ("1996-01-02") is the day's START; widen it to
-      // cover the whole day so the prune can never drop matching rows
-      // that the exact filter would keep
-      val hiWide = if (hi.length == 10) hi + " 23:59:59.999999" else hi
-      byRel.get(rel).forall { case (mn, mx) => mx >= lo && mn <= hiWide }
-    }
-    val df = load(name, m.copy(mapping = keep))
-    require(df.schema(column).dataType.typeName == "timestamp",
-      s"readWhereTimestamp needs a TIMESTAMP column; $column is " +
-        df.schema(column).dataType.typeName)
-    df.filter(col(column) >= lit(lo).cast("timestamp") &&
-      col(column) <= lit(hi).cast("timestamp"))
-  }
-
-  /** Range scan with manifest-stats skipping on a STRING column --
-    * the prefix/range prune a string-z-ordered or string-clustered
-    * table earns. Stat bounds compare as UNSIGNED UTF-8 BYTES, which
-    * is exactly Spark's UTF8String comparison order (Java's
-    * lexicographic String order diverges on supplementary characters
-    * -- comparing with it could wrongly prune a partition). Same
-    * conservative semantics as [[readWhere]]: a rel without stats for
-    * the column always scans. Bounds are inclusive. */
-  def readWhereString(name: String, column: String, lo: String,
-      hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def u8(a: String, b: String): Int = {
-      val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-      val n = math.min(x.length, y.length)
-      var i = 0
-      while (i < n) {
-        val d = (x(i) & 0xff) - (y(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      x.length - y.length
-    }
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    val byRel = m.stats.filter(_._2 == column)
-      .map(s => s._1 -> ((s._3, s._4))).toMap
-    val keep = m.mapping.filter { case (rel, _) =>
-      byRel.get(rel).forall { case (mn, mx) =>
-        u8(mx, lo) >= 0 && u8(mn, hi) <= 0 }
-    }
-    val df = load(name, m.copy(mapping = keep))
-    require(df.schema(column).dataType ==
-      org.apache.spark.sql.types.StringType,
-      s"readWhereString needs a STRING column; $column is " +
-        df.schema(column).dataType.typeName)
-    df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
-  /** Conjunctive multi-column range scan: a partition survives only
-    * if EVERY given column's recorded range intersects its bound --
-    * compound predicates prune multiplicatively. Same conservative
-    * semantics as [[readWhere]] per column. */
-  def readWhereAll(name: String, bounds: Map[String, (Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(bounds.nonEmpty, "readWhereAll needs at least one column bound")
-    val m = current(name).getOrElse(
-      throw new NoSuchElementException(s"no snapshots for $name"))
-    val byColRel = m.stats.flatMap { s =>
-      try Some(((s._2, s._1), (BigDecimal(s._3), BigDecimal(s._4))))
-      catch { case _: NumberFormatException => None }
-    }.toMap
-    val keep = m.mapping.filter { case (rel, _) =>
-      bounds.forall { case (c, (lo, hi)) =>
-        byColRel.get((c, rel)).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
-    val df = load(name, m.copy(mapping = keep))
-    bounds.keys.foreach { c =>
-      val dt = df.schema(c).dataType
-      require(Seq("byte", "short", "integer", "long").contains(dt.typeName),
-        s"readWhereAll needs integer-family columns; $c is ${dt.typeName}")
-    }
-    // sorted fold: Map iteration order must not leak into the plan
-    // (stable explain output / canonical predicate order)
-    bounds.toSeq.sortBy(_._1).foldLeft(df) { case (d, (c, (lo, hi))) =>
-      d.filter(col(c) >= lo && col(c) <= hi)
-    }
-  }
-
   /** Time travel: the table exactly as of snapshot `v`. */
   def readVersion(name: String, v: Long): DataFrame =
     load(name, manifestAt(name, v).getOrElse(throw new NoSuchElementException(
       s"$name has no live snapshot $v (expired or never committed)")))
 
-  /** Timestamp time travel: the highest live version whose commit
-    * landed at or before `tsMillis` -- the `TIMESTAMP AS OF`
-    * analogue. Commit times are wall-clock stamps written into the
-    * manifest at CAS time (a total order only because commits to one
-    * table are serialized by the CAS; do not compare across
-    * machines with skewed clocks). Pre-timestamp manifests (older
-    * stores) carry -1 and resolve as "before every timestamp".
-    * Throws when every live version is newer than `tsMillis`. */
-  def versionAsOf(name: String, tsMillis: Long): Long = {
-    val dir = commitsPath(name)
-    val eligible =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq
-        .filter(_.getPath.getName.matches("c\\d{8}"))
-        .sortBy(_.getPath.getName)
-        .flatMap(st => readManifest(st.getPath))
-        .filter(_.committedAtMs <= tsMillis)
-    eligible.map(_.version).maxOption.getOrElse(
-      throw new NoSuchElementException(
-        s"$name has no snapshot committed at or before $tsMillis"))
-  }
+  /** Timestamp time travel: the highest live PUBLISHED main-lineage
+    * version whose commit landed at or before `tsMillis` -- the
+    * `TIMESTAMP AS OF` analogue. Staged (WAP) snapshots and branch
+    * commits are not the table's history, so they never resolve here
+    * (read them by version, branch or WAP id). Commit times are
+    * wall-clock stamps written into the manifest at CAS time (a total
+    * order only because commits to one table are serialized by the
+    * CAS; do not compare across machines with skewed clocks).
+    * Pre-timestamp manifests (older stores) carry -1 and resolve as
+    * "before every timestamp". Throws when every live version is newer
+    * than `tsMillis`. */
+  def versionAsOf(name: String, tsMillis: Long): Long =
+    published(name).filter(_.committedAtMs <= tsMillis)
+      .map(_.version).maxOption.getOrElse(
+        throw new NoSuchElementException(
+          s"$name has no snapshot committed at or before $tsMillis"))
 
   /** The table as of a wall-clock instant (see [[versionAsOf]]). */
   def readAsOf(name: String, tsMillis: Long): DataFrame =
@@ -762,17 +553,20 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
       case None => current(name).getOrElse(
         throw new NoSuchElementException(s"no snapshots for $name"))
     }
+    view(name, m)
+  }
+
+  private def view(name: String, m: Manifest): catalog.GraftSnapshot =
     catalog.GraftSnapshot(m.version, m.partitionBy, m.schemaDDL,
       m.mapping.map { case (rel, d) => rel -> s"${dataRoot(name)}/$d" },
       m.stats, m.committedAtMs, m.parent,
       m.deletes.map { case (d, c) => s"${dataRoot(name)}/$d" -> c },
       m.fieldIds, m.columnDefaults, m.checks)
-  }
 
   /** Metadata-only schema evolution: commit a new snapshot that
     * shares EVERY data dir with the head and differs only in its
     * stored schema DDL. Reads resolve against the manifest schema
-    * ([[load]] hands it to the parquet reader explicitly), so an
+    * (every scan reads files through it), so an
     * ADDED column reads as NULL from pre-evolution files and a
     * DROPPED column is simply no longer projected — zero data I/O,
     * Iceberg-style. Constraints enforced here (the physical ones;
@@ -1506,9 +1300,11 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     *
     *  - cost is O(keys), not O(matched partitions) — the takedown
     *    path for "remove these document ids from a 100 TB corpus";
-    *  - reads (store API and SQL catalog alike) anti-join the pending
-    *    key sets out; [[compact]] / any full rewrite applies them
-    *    physically and clears the manifest entries;
+    *  - reads (store API and SQL catalog alike) filter the pending
+    *    key sets out row by row (`MorKeys`: loaded to the driver per
+    *    scan, bounded by `spark.graft.mor.maxScanKeys`); [[compact]] /
+    *    any full rewrite applies them physically and clears the
+    *    manifest entries;
     *  - deletes are SNAPSHOT-WIDE while pending: a key re-inserted by
     *    a later append stays suppressed until a full rewrite applies
     *    the deletes. Run [[compact]] before re-inserting suppressed
@@ -1520,7 +1316,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     *    insert-only table stream fails loud, per its contract.
     *
     * Keys must be DATA columns of supported types; null keys are
-    * dropped (an anti-join could never match them). Commutative with
+    * dropped (a null key never matches a row). Commutative with
     * concurrent appends — conflicts retry bounded, like
     * [[commitStagedAppend]]. Returns the committed version. */
   def deleteKeys(name: String, keys: DataFrame,
@@ -1580,63 +1376,15 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
       (s"${dataRoot(name)}/$d", c)
     }).getOrElse(Nil)
 
-  /** Resolve a manifest to a DataFrame: one pruned parquet relation
-    * per distinct data dir (basePath keeps hive partition-column
-    * recovery), unioned by name. Delta chains stay short because
-    * full commits and [[compact]] collapse them; a scan never fans
-    * wider than the number of retained delta commits.
-    *
-    * The manifest's stored schema is passed to the reader explicitly:
-    * no footer-inference job, and a zero-file data dir (an empty
-    * commit) reads as an empty relation instead of failing inference.
-    * An empty MAPPING (empty partitioned commit -- hive layout writes
-    * no partition dirs at all) short-circuits to an empty DataFrame
-    * with the committed schema. */
-  private def load(name: String, m: Manifest): DataFrame = {
-    // ID-stamped read schema: columns resolve by field ID (renames
-    // served metadata-only), falling back to the plain name-matched
-    // read on pre-identity tables. Partition columns come from rel
-    // paths, not files — never stamped (see FieldIds invariant).
-    val schema = Option(m.schemaDDL).filter(_.nonEmpty)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .map(s => FieldIds.stamp(s,
-        m.fieldIds.filterNot { case (n, _) => m.partitionBy.contains(n) }))
-      // existence defaults: files predating an ADD COLUMN ... DEFAULT
-      // materialize the frozen default instead of NULL (files holding
-      // the column serve stored values verbatim, NULLs included)
-      .map(s => ColumnDefaults.stamp(s, m.columnDefaults))
-    if (m.mapping.isEmpty)
-      return schema.map(s => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-        .getOrElse(spark.emptyDataFrame)
-    val groups = m.mapping.groupBy(_._2).toSeq.sortBy(_._1)
-    val parts = groups.map { case (d, entries) =>
-      val base = s"${dataRoot(name)}/$d"
-      val reader = schema.fold(spark.read)(spark.read.schema)
-      if (m.partitionBy.isEmpty) reader.parquet(base)
-      else reader.option("basePath", base)
-        .parquet(entries.map { case (rel, _) => s"$base/$rel" }: _*)
-    }
-    val df = parts.reduce(_.unionByName(_))
-    // merge-on-read equality deletes: each pending batch anti-joins
-    // its key set out of the scan (broadcast: takedown-sized by
-    // contract, and compact/any full rewrite applies + clears them)
-    val afterDeletes = m.deletes.foldLeft(df) { case (acc, (dd, cols)) =>
-      val keyCols = cols.split(",").toSeq
-      val keys = spark.read.parquet(s"${dataRoot(name)}/$dd")
-      acc.join(org.apache.spark.sql.functions.broadcast(keys),
-        keyCols, "left_anti")
-    }
-    // hidden partition columns (directory-derived, appended by
-    // partition discovery) never reach the logical schema
-    val hidden = PartitionTransforms.hiddenNames(m.partitionBy)
-    val visible = if (hidden.isEmpty) afterDeletes
-      else afterDeletes.drop(hidden: _*)
-    // field-ID metadata served its purpose (file matching above);
-    // strip it so downstream writes never inherit this table's
-    // identities (see FieldIds.stripDf)
-    FieldIds.stripDf(visible)
-  }
+  /** Resolve a manifest (or a rel subset of one) to a DataFrame: one
+    * scan over its manifest-pinned file index, the catalog's own read
+    * path (see [[read]] and [[catalog.SnapshotRead]]). The manifest's
+    * stored schema drives the read (no footer inference; a zero-file
+    * or empty-mapping snapshot reads as an empty relation with the
+    * committed columns), and pending merge-on-read deletes filter out
+    * row by row. */
+  private def load(name: String, m: Manifest): DataFrame =
+    new catalog.SnapshotRead(this, name, view(name, m)).dataFrame
 
   /** Live commits or expiry tombstones with a version beyond
     * `observedParent`, other than the writer's own `selfV` -- evidence
@@ -2055,7 +1803,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     // stats come from a re-read of the files just written, never from
     // `df`: a non-deterministic input (rand(), unseeded sample) would
     // otherwise record min/max from a DIFFERENT evaluation than the
-    // rows on disk, and readWhere would prune partitions that hold
+    // rows on disk, and stats skipping would prune partitions that hold
     // matching rows -- the same reason Delta/Iceberg derive file stats
     // from the written files. (written is empty only for an empty
     // partitioned commit: no dirs, nothing to stat.)
@@ -2119,8 +1867,8 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
 
   /** Full-snapshot commit (create / replace). Returns the version.
     * `statsColumns`: record per-partition min/max of these columns in
-    * the manifest (costs one extra aggregate pass) -- [[readWhere]]
-    * prunes partitions with them at plan time. */
+    * the manifest (costs one extra aggregate pass) -- filtered reads
+    * prune partitions with them at plan time (see [[read]]). */
   def commitFull(df: DataFrame, name: String,
       partitionBy: Seq[String] = Nil,
       statsColumns: Seq[String] = Nil,
@@ -2140,7 +1888,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     * open (both need the key ORDERED to prune; a bloom doesn't).
     * Read side needs no special path: Spark pushes the equality
     * predicate into the parquet reader, which consults row-group
-    * stats, dictionaries, and blooms (see [[readPoint]]).
+    * stats, dictionaries, and blooms (`read(t).filter(k === v)`).
     * [[commitPartitions]] takes the same knobs, so delta-maintained
     * tables keep their index on appended partitions; DML rewrites
     * (deleteWhere/updateWhere/upsert) currently rewrite touched
@@ -2410,7 +2158,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     * `__cluster` bucket (quantile boundaries via approx_percentile --
     * near-equal bucket sizes under any distribution), with `column`'s
     * min/max recorded per bucket. Because buckets are value ranges,
-    * the recorded stats are TIGHT, and [[readWhere]] on `column`
+    * the recorded stats are TIGHT, and a range filter on `column`
     * prunes to the touched buckets -- data skipping for columns the
     * natural partitioning can't express (Z-order-lite, one dimension).
     *
@@ -2442,7 +2190,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     * interleaves the bits of each column's quantile RANK -- rows close
     * in every clustered dimension land in the same cell, so the
     * recorded per-cell min/max stay tight on ALL columns at once and
-    * [[readWhereAll]] prunes multiplicatively on compound predicates
+    * a compound range filter prunes multiplicatively
     * (the thing 1-D range clustering structurally cannot do: tight on
     * its column, useless on every other).
     *
@@ -2534,7 +2282,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
         if (branch.isEmpty) s"no snapshots for $name"
         else s"$name has no branch `$branch`"))
     // recompute stats for whichever columns the parent tracked, so
-    // compaction never silently turns readWhere pruning off. On a
+    // compaction never silently turns stats skipping off. On a
     // branch: collapse the branch's own delta chain (and apply its
     // pending merge-on-read deletes) before a merge — note the
     // compacted rels count as branch-CHANGED at merge time.
@@ -2561,7 +2309,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     * repartitioned to their packed file count (a k-way salted spread
     * when one partition wants several output files), re-stated, and
     * committed with the untouched mapping entries carried over --
-    * readWhere pruning keeps working on the repacked files. */
+    * stats skipping keeps working on the repacked files. */
   def optimizeSmallFiles(name: String,
       targetBytes: Long = DefaultTargetFileBytes, minFiles: Int = 2): Long = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
@@ -2623,7 +2371,7 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
           val rows = load(name,
             m.copy(mapping = group.map { case (rel, d, _) => (rel, d) }))
           // group by the LAYOUT dimensions: identity columns as-is,
-          // transforms re-derived (hidden cols never leave load())
+          // transforms re-derived (hidden cols never reach a read)
           val pcols = PartitionTransforms.specs(m.partitionBy).map(_.derive)
           val keys =
             if (k == 1) pcols
@@ -3560,10 +3308,16 @@ class VersionedTableStore(val spark: SparkSession, val root: String,
     require(live.headOption.contains(fromV) && live.lastOption.contains(toV),
       s"$name has no live snapshots at both ends of [$fromV, $toV]")
     import org.apache.spark.sql.functions.lit
-    live.sliding(2).collect { case Seq(a, b) =>
+    val diffs = live.sliding(2).collect { case Seq(a, b) =>
       snapshotDiff(name, a, b, keys, includePre = includePre)
         .withColumn("commit_version", lit(b))
-    }.reduce(_ unionByName _)
+    }.toSeq
+    // every diff speaks its TO snapshot's schema: a schema change inside
+    // the range would misalign a positional union, so reject it
+    require(diffs.forall(_.columns.sameElements(diffs.head.columns)),
+      s"$name changed its schema inside [$fromV, $toV]; walk each side " +
+        "of the change separately")
+    diffs.reduce(_ union _)
   }
 
   /** SQL surface: the current snapshot as a session temp view (a

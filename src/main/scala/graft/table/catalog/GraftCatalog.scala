@@ -12,7 +12,6 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.graft.GraftScanPlanning
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -536,8 +535,12 @@ class GraftTable(st: VersionedTableStore, tableName: String,
     }
   }
 
-  private[catalog] val snapshot: GraftSnapshot =
-    st.snapshotView(tableName, pinnedVersion)
+  /** The pinned snapshot's read side: schemas, file index, pending
+    * deletes — shared with the store's library reads. */
+  private val read = new SnapshotRead(st, tableName,
+    st.snapshotView(tableName, pinnedVersion))
+
+  private[catalog] def snapshot: GraftSnapshot = read.snapshot
 
   /** Iceberg's `spark.wap.id` pattern: while this session conf is
     * set, INSERT INTO / INSERT OVERWRITE — and, since r13, the
@@ -567,67 +570,12 @@ class GraftTable(st: VersionedTableStore, tableName: String,
         "staged: only INSERT stages under WAP. Unset the conf to run " +
         s"$stmt directly against the head.")
 
-
-  private val storedSchema: StructType =
-    if (snapshot.schemaDDL.nonEmpty) StructType.fromDDL(snapshot.schemaDDL)
-    else StructType(Nil)
-
-  private val pSpecs = graft.table.PartitionTransforms
-    .specs(snapshot.partitionBy)
-
-  /** Directory-layout schema the file index parses rel paths with:
-    * identity columns keep their declared field; transforms
-    * contribute their DERIVED (hidden) column. */
-  private val partitionSchema: StructType =
-    StructType(pSpecs.map {
-      case id: graft.table.PartitionTransforms.Identity =>
-        storedSchema(id.source)
-      case sp => org.apache.spark.sql.types.StructField(
-        sp.derivedName, sp.derivedType, nullable = true)
-    })
-
-  /** Identity partition fields only — what the PUBLIC schema appends
-    * (hidden transform columns never surface: the user queries the
-    * SOURCE column, stats pruning does the partition skipping). */
-  private val identityPartitionSchema: StructType =
-    StructType(pSpecs.collect {
-      case id: graft.table.PartitionTransforms.Identity =>
-        storedSchema(id.source)
-    })
-
-  // ID-stamped (graft.table.FieldIds): scans of a ledgered table
-  // match file columns by stable field ID — what serves a RENAMEd
-  // column from pre-rename files with zero data I/O; before any
-  // rename the stamp is a behavioral no-op (IDs agree with names).
-  // The stamp MUST ride the reported schema: Spark's parquet scan
-  // derives its file-read schema from the plan's pushed
-  // requiredSchema (relation output), not from the builder's
-  // dataSchema. Plan OUTPUTS are re-cleaned at the scan boundary
-  // (GraftScan.readSchema strips the metadata) so downstream
-  // consumers and writes never inherit this table's identities.
-  private val dataSchema: StructType =
-    graft.table.ColumnDefaults.stamp(
-      graft.table.FieldIds.stamp(
-        // identity partition columns live in paths; TRANSFORM SOURCE
-        // columns are ordinary data columns inside every file
-        StructType(storedSchema.filterNot(f => pSpecs.exists {
-          case id: graft.table.PartitionTransforms.Identity =>
-            id.source == f.name
-          case _ => false
-        })),
-        snapshot.fieldIds),
-      // EXISTS_DEFAULT rides the same pushed schema (pre-add files
-      // materialize the frozen default); CURRENT_DEFAULT on schema()
-      // is what fills INSERTs that omit the column
-      snapshot.columnDefaults)
-
   override def name(): String = s"graft.default.$tableName"
 
-  override def schema(): StructType =
-    StructType(dataSchema ++ identityPartitionSchema)
+  override def schema(): StructType = read.schema
 
   override def partitioning(): Array[Transform] =
-    pSpecs.map {
+    graft.table.PartitionTransforms.specs(snapshot.partitionBy).map {
       case id: graft.table.PartitionTransforms.Identity =>
         Expressions.identity(id.source)
       case d: graft.table.PartitionTransforms.Days =>
@@ -678,25 +626,11 @@ class GraftTable(st: VersionedTableStore, tableName: String,
     caps
   }
 
-  /** Pending merge-on-read delete keys, loaded driver-side ONCE per
-    * scan build (takedown-sized by the store's contract; cleared by
-    * the next full rewrite). Every scan this table plans filters them
-    * out row-by-row. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    GraftScanPlanning.scanBuilder(st.spark,
-      GraftScanPlanning.fileIndex(st.spark, partitionSchema,
-        snapshot.entries, snapshot.stats,
-        // lazy hook: a pushed equality on an indexed column prunes
-        // partitions via the version-pinned bloom sidecars
-        bloomFor = c => st.bloomIndexFor(tableName, c, snapshot.version)),
-      schema(), dataSchema, options, partitionSchema,
+    read.scanBuilder(options,
       stream = if (pinnedVersion.isEmpty)
         Some(org.apache.spark.sql.graft.GraftStreamSpec(st.root, tableName))
-      else None,
-      mor = if (snapshot.deletes.isEmpty) Nil
-        else org.apache.spark.sql.graft.MorKeys.build(st.spark,
-          snapshot.deletes),
-      layout = snapshot.partitionBy)
+      else None)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -840,7 +774,7 @@ class GraftTable(st: VersionedTableStore, tableName: String,
         }
       }.toSeq: _*)
     }
-    val aligned = alignTo(storedSchema)
+    val aligned = alignTo(read.storedSchema)
     val statsCols = st.statsFor(tableName)
     val pby = snapshot.partitionBy
     require(wapId.isEmpty || branchRef.isEmpty,

@@ -4,8 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, Write, WriteBuilder}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.graft.{GraftBatchWrite, GraftScan, GraftScanPlanning}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{GraftBatchWrite, GraftScan}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.table.VersionedTableStore
@@ -38,36 +37,11 @@ class GraftRowLevelOp(st: VersionedTableStore, tableName: String,
 
   @volatile private var scanRef: GraftScan = _
 
-  // The directory-layout schema (identity fields + hidden DERIVED
-  // fields) the file index parses rels with — distinct from the
-  // table-visible schema on hidden-partitioned layouts
-  private val partitionSchema: StructType = {
-    val full = StructType.fromDDL(snapshot.schemaDDL)
-    graft.table.PartitionTransforms.derivedSchema(snapshot.partitionBy, full)
-  }
-  // ID-stamped (graft.table.FieldIds): the scan resolves pre-rename
-  // files by field ID (the stamp must ride the schema Spark prunes
-  // from — see GraftTable.dataSchema); the staged replacement files
-  // are re-stamped with the same IDs by GraftBatchWrite, and scan
-  // outputs are cleaned at GraftScan.readSchema. Identity partition
-  // columns live in paths; a transform's SOURCE column is an ordinary
-  // data column inside every file.
-  private val dataSchema: StructType = {
-    val full = StructType.fromDDL(snapshot.schemaDDL)
-    val idSources =
-      graft.table.PartitionTransforms.identitySources(snapshot.partitionBy)
-        .toSet
-    graft.table.FieldIds.stamp(
-      StructType(full.filterNot(f => idSources(f.name))),
-      snapshot.fieldIds)
-  }
-  // identity partition fields only — what the TABLE-visible row
-  // carries next to the data columns (hidden columns never surface)
-  private val identityPartitionSchema: StructType = {
-    val full = StructType.fromDDL(snapshot.schemaDDL)
-    StructType(graft.table.PartitionTransforms
-      .identitySources(snapshot.partitionBy).map(full.apply))
-  }
+  // the group scan reads through the same schemas, file index and
+  // pending deletes as every other read of this snapshot; the staged
+  // replacement files are re-stamped with its field IDs by
+  // GraftBatchWrite
+  private val read = new SnapshotRead(st, tableName, snapshot)
 
   override def command(): Command = cmd
 
@@ -75,18 +49,7 @@ class GraftRowLevelOp(st: VersionedTableStore, tableName: String,
     s"graft $cmd on $tableName @ v${snapshot.version}"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    GraftScanPlanning.rowOpScanBuilder(st.spark,
-      GraftScanPlanning.fileIndex(st.spark, partitionSchema,
-        snapshot.entries, snapshot.stats),
-      // the TABLE-visible row: data columns + identity partition
-      // columns (hidden derived columns exist only in the file
-      // index's layout schema and in filters projected onto it)
-      StructType(dataSchema ++ identityPartitionSchema), dataSchema, options,
-      partitionSchema, s => scanRef = s,
-      mor = if (snapshot.deletes.isEmpty) Nil
-        else org.apache.spark.sql.graft.MorKeys.build(st.spark,
-          snapshot.deletes),
-      layout = snapshot.partitionBy)
+    read.rowOpScanBuilder(options, s => scanRef = s)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {

@@ -23,3 +23,11 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** Same visibility bridge for `private[spark] StructType.asNullable`
+  * (nested fields included): how Spark's file sources present a file
+  * schema, mirrored by the store's library reads. */
+object SchemaBridge {
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+}

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartiti
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusCache, InMemoryFileIndex, PartitionDirectory, PartitionPath, PartitionSpec, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusCache, InMemoryFileIndex, PartitionDirectory, PartitionPath, PartitionSpec, PartitionedFile, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.internal.connector.{PredicateUtils, SupportsMetadata}
 import org.apache.spark.sql.{sources => v1}
@@ -26,29 +26,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * -> immutable data dir) entries plus manifest column stats — into
   * Spark's OWN parquet scan machinery.
   *
-  * The file index is an [[InMemoryFileIndex]] whose partition spec is
+  * The file index ([[GraftFileIndex]]) carries a partition spec
   * built from the MANIFEST, never inferred from paths: each mapping
   * entry contributes one [[PartitionPath]] whose typed values come
   * from casting the hive-encoded rel segments with the table schema.
   * That buys, with zero custom execution code:
   *
-  *  - catalyst partition pruning (`PartitioningAwareFileIndex
-  *    .listFiles` evaluates pushed partition filters against the
-  *    spec before any file is considered);
+  *  - catalyst partition pruning (pushed partition filters evaluated
+  *    against the spec before any dir is listed);
   *  - parquet filter/column pushdown and vectorized reads (the scan
   *    is Spark's [[ParquetScanBuilder]], exactly what `spark.read
   *    .parquet` plans);
   *  - manifest-stats data skipping: [[GraftFileIndex.listFiles]]
-  *    additionally drops files whose partition's recorded [min, max]
-  *    for a pushed data filter's column is disjoint from the
-  *    filter's bounds — the store's `readWhere` pruning, now fired
-  *    by ordinary `WHERE` clauses through the catalog.
+  *    additionally drops partitions whose recorded [min, max] for a
+  *    pushed data filter's column is disjoint from the filter's
+  *    bounds, and consults the partition bloom index for equalities —
+  *    fired by ordinary `WHERE` clauses through the catalog and by
+  *    `filter`s on the store's library reads alike (both plan over
+  *    this one index).
   *
-  * Bounds extraction is deliberately conservative: only integer-family
-  * comparisons against literals are consulted, every bound is widened
-  * to a closed interval, and a rel with no recorded stats for the
-  * column always scans — identical discipline to
-  * `VersionedTableStore.statsPruned` (VersionedTableStore.scala:283).
+  * Bounds extraction is deliberately conservative: only comparisons of
+  * a column against literals are consulted (integer-family bounds
+  * numerically, STRING / DATE / TIMESTAMP bounds in their ordered
+  * string rendering), every bound is widened to a closed interval, and
+  * a rel with no recorded stats for the column always scans.
   */
 object GraftScanPlanning {
 
@@ -114,7 +115,7 @@ object GraftScanPlanning {
     // the RAW string stats beside the numeric parse: string / date /
     // timestamp bounds skip on these (cast-to-string renderings of
     // ISO dates and zero-padded timestamps order lexicographically ==
-    // chronologically — the store's readWhereTimestamp discipline)
+    // chronologically)
     val rawStatsByRel = stats.groupBy(_._1).map { case (rel, rows) =>
       rel -> rows.map { case (_, c, mn, mx) => c -> ((mn, mx)) }.toMap
     }
@@ -349,21 +350,42 @@ object GraftScanPlanning {
         if (his.isEmpty) None else Some(his.min)))
     }
   }
+
+  /** (column, value) of every STRING-column equality against a
+    * non-null string literal in a conjunction — the string keys a
+    * partition bloom index can rule out. */
+  private[graft] def stringEqualities(
+      filters: Seq[Expression]): Seq[(String, String)] =
+    filters.flatMap {
+      case And(l, r) => stringEqualities(Seq(l, r))
+      case EqualTo(a: AttributeReference, Literal(v, StringType))
+          if a.dataType == StringType && v != null => Seq(a.name -> v.toString)
+      case EqualTo(Literal(v, StringType), a: AttributeReference)
+          if a.dataType == StringType && v != null => Seq(a.name -> v.toString)
+      case _ => Nil
+    }
 }
 
-/** [[InMemoryFileIndex]] over a manifest-pinned snapshot with
-  * manifest-stats data skipping layered into [[listFiles]]: after
-  * Spark's own partition pruning, files whose leaf dir's recorded
-  * [min, max] for a pushed filter column is disjoint from the
-  * filter's closed-interval bounds are dropped BEFORE tasks are
-  * planned. A leaf with no stats row for the column always survives
-  * (conservative), so pruning can only remove provably-empty reads.
+/** File index over a manifest-pinned snapshot. Planning prunes whole
+  * partitions (rels) BEFORE listing any of them, and lists only the
+  * survivors:
   *
-  * The listing itself goes through the process-global
-  * [[FileStatusCache]]: snapshot data dirs are immutable once
-  * committed (rewrites land in FRESH dirs, expiry deletes whole
-  * dirs), so cached listings stay valid for exactly as long as the
-  * snapshot they describe is readable. */
+  *  1. Spark's partition pruning — pushed partition filters evaluated
+  *     against the manifest-built partition spec;
+  *  2. manifest-stats skipping — a partition whose recorded [min, max]
+  *     for a pushed filter column is disjoint from the filter's
+  *     closed-interval bounds is dropped; a partition with no stats row
+  *     for the column always survives (conservative), so pruning can
+  *     only remove provably-empty reads;
+  *  3. the partition bloom index, for equalities on an indexed column.
+  *
+  * Listing goes through the process-global [[FileStatusCache]] and
+  * Spark's own bulk lister (parallel past the session's discovery
+  * threshold; a missing dir fails the read): snapshot data dirs are
+  * immutable once committed (rewrites land in FRESH dirs, expiry
+  * deletes whole dirs), so cached listings stay valid for exactly as
+  * long as the snapshot they describe is readable. Whole-snapshot
+  * questions (`inputFiles`, `sizeInBytes`) list every partition. */
 class GraftFileIndex(spark: org.apache.spark.sql.classic.SparkSession,
     leafDirs: Seq[Path], spec: PartitionSpec,
     statsByRel: Map[String, Map[String, (BigDecimal, BigDecimal)]],
@@ -372,12 +394,82 @@ class GraftFileIndex(spark: org.apache.spark.sql.classic.SparkSession,
       Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
       _ => None,
     rawStatsByRel: Map[String, Map[String, (String, String)]] = Map.empty)
-  extends InMemoryFileIndex(spark, leafDirs, Map.empty[String, String], None,
-    FileStatusCache.getOrCreate(spark), Some(spec), None) {
+  extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+
+  private val statusCache = FileStatusCache.getOrCreate(spark)
+  private val listed =
+    new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+
+  /** The data files of each leaf dir, listed on first use. */
+  private def filesOf(leaves: Seq[Path]): Seq[(Path, Array[FileStatus])] = {
+    val toList = leaves.distinct.filterNot(listed.containsKey).filter { p =>
+      statusCache.getLeafFiles(p) match {
+        case Some(fs) => listed.put(p, fs); false
+        case None => true
+      }
+    }
+    if (toList.nonEmpty) {
+      val found = InMemoryFileIndex.bulkListLeafFiles(toList, hadoopConf, null,
+        spark).toMap
+      toList.foreach { p =>
+        val fs = found.getOrElse(p, Nil).toArray
+        // a live manifest maps only dirs its commit wrote: a missing one
+        // is a damaged table (deleted out of band), never an empty
+        // partition — fail loudly instead of reading it as empty
+        if (fs.isEmpty && !p.getFileSystem(hadoopConf).exists(p))
+          throw new java.io.FileNotFoundException(
+            s"data dir $p of a live snapshot is missing")
+        statusCache.putLeafFiles(p, fs)
+        listed.put(p, fs)
+      }
+    }
+    leaves.map(p => p -> listed.get(p))
+  }
+
+  private def isDataFile(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  override def rootPaths: Seq[Path] = leafDirs
+  override def partitionSpec(): PartitionSpec = spec
+  override def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    filesOf(leafDirs).toMap
+  override def leafFiles
+      : scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+    scala.collection.mutable.LinkedHashMap.from(
+      filesOf(leafDirs).flatMap(_._2).map(f => f.getPath -> f))
+  override def allFiles(): Seq[FileStatus] = filesOf(leafDirs).flatMap(_._2)
+  override def refresh(): Unit = { listed.clear(); statusCache.invalidateAll() }
+
+  // scans over the same dirs are the same scan (what lets Spark reuse
+  // an exchange over two reads of one snapshot)
+  override def equals(other: Any): Boolean = other match {
+    case g: GraftFileIndex => leafDirs.toSet == g.rootPaths.toSet
+    case _ => false
+  }
+  override def hashCode(): Int = leafDirs.toSet.hashCode
+
+  /** Partitions surviving the pushed partition filters. */
+  private def partitionsFor(filters: Seq[Expression]): Seq[PartitionPath] = {
+    val cols = spec.partitionColumns
+    if (cols.isEmpty) return leafDirs.map(PartitionPath(InternalRow.empty, _))
+    val names = cols.fieldNames.toSet
+    val usable = filters.filter(f => f.deterministic &&
+      f.references.forall(r => names(r.name)))
+    if (usable.isEmpty) spec.partitions
+    else {
+      val bound = ce.Predicate.createInterpreted(usable.reduce(And).transform {
+        case a: AttributeReference =>
+          val i = cols.fieldNames.indexOf(a.name)
+          ce.BoundReference(i, cols(i).dataType, nullable = true)
+      })
+      spec.partitions.filter(pp => bound.eval(pp.values))
+    }
+  }
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val base = super.listFiles(partitionFilters, dataFilters)
     val bounds = GraftScanPlanning.filterBounds(dataFilters)
     // ordered-string bounds (string/date/timestamp stats): same
     // rel-atomic skip, lexicographic compare over one shared rendering
@@ -388,51 +480,47 @@ class GraftFileIndex(spark: org.apache.spark.sql.classic.SparkSession,
     // disagrees with it around supplementary characters — a mismatch
     // there would over-prune, i.e. lose rows
     def u8(s: String): UTF8String = UTF8String.fromString(s)
-    val strSurvive: Path => Boolean =
-      if (strBounds.isEmpty || rawStatsByRel.isEmpty) _ => true
-      else { file =>
-        val st = relOfLeaf.get(file.getParent.toString)
-          .flatMap(rawStatsByRel.get).getOrElse(Map.empty)
-        strBounds.forall { case (c, (lo, hi)) =>
-          st.get(c).forall { case (mn, mx) =>
-            lo.forall(l => u8(mx).compareTo(u8(l)) >= 0) &&
-              hi.forall(h => u8(mn).compareTo(u8(h)) <= 0)
-          }
-        }
-      }
-    if (strBounds.nonEmpty && rawStatsByRel.nonEmpty && bounds.isEmpty) {
-      return base.map(pd =>
-          pd.copy(files = pd.files.filter(f => strSurvive(f.getPath))))
-        .filter(_.files.nonEmpty)
-    }
-    if (bounds.isEmpty) return base
     // partition bloom consultation is LAZY and per-query: only an
-    // EQUALITY bound (lo == hi, long-valued) on a column with a
-    // complete index for this exact snapshot loads blooms — point
-    // lookups through plain SQL get the sidecar pruning for free,
-    // range scans never pay the load. A bloom can only say
-    // "definitely absent": false positives widen the scan, never the
-    // results, and a rel missing from the index scans conservatively.
-    val equalities: Map[String,
-        (Long, Map[String, org.apache.spark.util.sketch.BloomFilter])] =
-      bounds.collect {
-        case (c, (lo, hi)) if lo == hi && lo.isValidLong => c -> lo
-      }.flatMap { case (c, v) =>
-        bloomFor(c).map(idx => c -> ((v.toLong, idx)))
+    // EQUALITY (long-valued, or a string) on a column with a complete
+    // index for this exact snapshot loads blooms — point lookups get
+    // the sidecar pruning for free, range scans never pay the load. A
+    // bloom can only say "definitely absent": false positives widen
+    // the scan, never the results, and a rel missing from the index
+    // scans conservatively.
+    type Bloom = org.apache.spark.util.sketch.BloomFilter
+    val equalities: Seq[(String, Bloom => Boolean)] =
+      bounds.toSeq.collect {
+        case (c, (lo, hi)) if lo == hi && lo.isValidLong =>
+          c -> ((b: Bloom) => b.mightContainLong(lo.toLong))
+      } ++ GraftScanPlanning.stringEqualities(dataFilters).map { case (c, v) =>
+        c -> ((b: Bloom) => b.mightContainString(v))
       }
-    if (equalities.isEmpty && statsByRel.isEmpty &&
-      (strBounds.isEmpty || rawStatsByRel.isEmpty)) return base
-    def survives(file: Path): Boolean = {
-      val rel = relOfLeaf.get(file.getParent.toString)
+    val blooms: Seq[(Map[String, Bloom], Bloom => Boolean)] =
+      equalities.flatMap { case (c, test) => bloomFor(c).map(_ -> test) }
+    def survives(leaf: Path): Boolean = {
+      val rel = relOfLeaf.get(leaf.toString)
       val st = rel.flatMap(statsByRel.get).getOrElse(Map.empty)
+      val raw = rel.flatMap(rawStatsByRel.get).getOrElse(Map.empty)
       bounds.forall { case (c, (lo, hi)) =>
         st.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } && equalities.forall { case (_, (v, idx)) =>
-        rel.flatMap(idx.get).forall(_.mightContainLong(v))
-      } && strSurvive(file)
+      } && strBounds.forall { case (c, (lo, hi)) =>
+        raw.get(c).forall { case (mn, mx) =>
+          lo.forall(l => u8(mx).compareTo(u8(l)) >= 0) &&
+            hi.forall(h => u8(mn).compareTo(u8(h)) <= 0)
+        }
+      } && blooms.forall { case (idx, test) =>
+        rel.flatMap(idx.get).forall(test)
+      }
     }
-    base.map(pd => pd.copy(files = pd.files.filter(f => survives(f.getPath))))
-      .filter(_.files.nonEmpty)
+    val kept = partitionsFor(partitionFilters).filter(pp => survives(pp.path))
+    val files = filesOf(kept.map(_.path)).toMap
+    val dirs =
+      if (spec.partitionColumns.isEmpty)
+        Seq(PartitionDirectory(InternalRow.empty,
+          kept.flatMap(pp => files(pp.path)).filter(isDataFile).toArray))
+      else kept.map(pp =>
+        PartitionDirectory(pp.values, files(pp.path).filter(isDataFile)))
+    dirs.filter(_.files.nonEmpty)
   }
 }
 
@@ -639,11 +727,16 @@ class GraftScan(initial: ParquetScan, partitionSchema: StructType,
     * resolves these refs against the matched-rows plan). Incoming
     * source filters are projected to derived partition filters in
     * [[filter]]. */
-  override def filterAttributes(): Array[NamedReference] =
-    if (transformBySrc.isEmpty)
-      partitionSchema.fieldNames.map(n => FieldReference.column(n))
-    else graft.table.PartitionTransforms.specs(layout)
-      .map(s => FieldReference.column(s.source)).toArray
+  override def filterAttributes(): Array[NamedReference] = {
+    // only columns the scan outputs: Spark resolves every filter
+    // attribute against the scan's (column-pruned) output, and one it
+    // cannot resolve fails the whole plan
+    val out = readSchema().fieldNames.toSet
+    val cols =
+      if (transformBySrc.isEmpty) partitionSchema.fieldNames.toSeq
+      else graft.table.PartitionTransforms.specs(layout).map(_.source)
+    cols.filter(out).map(n => FieldReference.column(n): NamedReference).toArray
+  }
 
   override def filter(predicates: Array[Predicate]): Unit = {
     val exprs = predicates.toIndexedSeq

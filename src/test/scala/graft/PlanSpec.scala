@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
 
 /** Physical-plan regression guards: the scale-critical plan
@@ -100,7 +101,7 @@ class PlanSpec extends AnyFunSuite {
       "benchmark gram set must broadcast (eval sets are tiny vs the corpus)")
   }
 
-  test("versioned store reads partition-prune through the manifest union fan") {
+  test("versioned store reads partition-prune through one manifest scan") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-planspec-v").toString
     val vs = new graft.table.VersionedTableStore(spark, root)
@@ -108,11 +109,15 @@ class PlanSpec extends AnyFunSuite {
       "pt", Seq("day"))
     vs.commitPartitions(Seq((3, "c", "d3")).toDF("k", "v", "day"), "pt", Seq("day"))
     val filtered = vs.read("pt").filter($"day" === "d3")
+    // two data dirs, ONE scan over the snapshot's file index
     val scans = collectAll(filtered.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec => f }
-    assert(scans.size === 2, "manifest fan should be one scan per data dir")
-    scans.foreach(s => assert(s.partitionFilters.exists(_.toString.contains("d3")),
-      s"scan lost the day partition filter: ${s.partitionFilters}"))
+      .collect { case b: BatchScanExec => b }
+    assert(scans.size === 1, "a store read should be one scan however many dirs")
+    val ps = scans.head.scan.asInstanceOf[org.apache.spark.sql.graft.GraftScan].parquetScan
+    assert(ps.partitionFilters.exists(_.toString.contains("d3")),
+      s"scan lost the day partition filter: ${ps.partitionFilters}")
+    val planned = graft.table.PlannedScan.files(filtered)
+    assert(planned.nonEmpty && planned.forall(_.contains("day=d3")))
     assert(filtered.count() === 1)
   }
 

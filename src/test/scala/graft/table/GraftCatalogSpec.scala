@@ -48,20 +48,19 @@ class GraftCatalogSpec extends AnyFunSuite {
     val pruned = spark.sql(
       "SELECT * FROM gtest.default.measures WHERE yr = 1997")
     assert(pruned.count() === 10)
-    val scan = pruned.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case b: BatchScanExec => b }.get
-    val files = scan.scan.asInstanceOf[org.apache.spark.sql.graft.GraftScan]
-      .parquetScan.fileIndex.inputFiles
-    // inputFiles is pre-pruning; the planned partitions are what count
-    val planned = scan.inputRDD.partitions.length
-    assert(planned >= 1)
-    val full = spark.sql("SELECT * FROM gtest.default.measures")
-    val fullScan = full.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case b: BatchScanExec => b }.get
-    assert(files.length === fullScan.scan
-      .asInstanceOf[org.apache.spark.sql.graft.GraftScan]
-      .parquetScan.fileIndex.inputFiles.length)
-    assert(planned < fullScan.inputRDD.partitions.length)
+    // the planned scan reads only yr=1997's files, strictly fewer than
+    // the unfiltered scan plans
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.forall(_.contains("yr=1997")),
+      s"partition pruning planned ${planned.mkString(",")}")
+    val fullDf = spark.sql("SELECT * FROM gtest.default.measures")
+    val full = PlannedScan.files(fullDf)
+    assert(planned.size < full.size)
+    // the index itself still spans the whole snapshot
+    def indexFiles(df: org.apache.spark.sql.DataFrame) = PlannedScan.scans(df)
+      .head.scan.asInstanceOf[org.apache.spark.sql.graft.GraftScan]
+      .parquetScan.fileIndex.inputFiles.length
+    assert(indexFiles(pruned) === indexFiles(fullDf))
   }
 
   test("manifest-stats skipping drops disjoint partitions from listFiles") {
@@ -501,6 +500,25 @@ class GraftCatalogSpec extends AnyFunSuite {
         fp.files.map(_.filePath.toPath.getParent.getName)
     }.toSet
     assert(dirs === Set("yr=1995"))
+  }
+
+  test("a dim-filtered join on a DATA column plans when the partition column is pruned") {
+    // DPP resolves the scan's runtime-filter attributes against its
+    // column-pruned output: a partition column the query never reads
+    // must not be offered, or the whole plan fails to resolve
+    store.commitFull(rows(1990 to 1993, 5), "dppd", Seq("yr"))
+    store.commitFull(Seq((1991002L, "keep"), (1992003L, "drop"))
+      .toDF("d_v", "d_tag"), "dppd_dim", Nil)
+    val q = spark.sql(
+      """SELECT f.tag FROM gtest.default.dppd f
+         JOIN gtest.default.dppd_dim d ON f.v = d.d_v
+         WHERE d.d_tag = 'keep'""")
+    assert(q.as[String].collect().toSeq === Seq("r1991-2"))
+    // the store's library read plans the same join
+    val lib = store.read("dppd").select("v", "tag")
+      .join(store.read("dppd_dim").filter(col("d_tag") === "keep"),
+        col("v") === col("d_v"))
+    assert(lib.select("tag").as[String].collect().toSeq === Seq("r1991-2"))
   }
 
   test("storage-partitioned join: co-partitioned tables join with no shuffle") {
@@ -1085,10 +1103,13 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.sql(
       "CALL gtest.system.build_bloom_index('blm', 'v', CAST(1000 AS BIGINT))")
       .as[Long].head() === 10L)
-    // indexed lookup agrees with a plain filter, hit and miss
-    assert(store.readPointIndexed("blm", "v", 1955003L)
-      .select("tag").as[String].collect().toSeq === Seq("r1955-3"))
-    assert(store.readPointIndexed("blm", "v", 42L).count() === 0)
+    // indexed lookup agrees with a plain filter, hit and miss, and
+    // plans only the owning year (keys are unique, blooms 3% fpp)
+    val hit = store.read("blm").filter(col("v") === 1955003L)
+    assert(hit.select("tag").as[String].collect().toSeq === Seq("r1955-3"))
+    assert(PlannedScan.files(hit).exists(_.contains("yr=1955")) &&
+      PlannedScan.files(hit).size < store.read("blm").inputFiles.length)
+    assert(store.read("blm").filter(col("v") === 42L).count() === 0)
   }
 
   test("pushed SQL equality consults the bloom index at scan planning") {

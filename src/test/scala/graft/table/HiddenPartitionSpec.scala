@@ -41,11 +41,14 @@ class HiddenPartitionSpec extends AnyFunSuite {
     // stats pruning on the SOURCE column: one day's range touches one
     // partition's files
     // ts stats record as timestamp strings (lexicographic = chrono);
-    // the timestamp range reader prunes whole days at plan time
-    val oneDay = vs.readWhereTimestamp("t", "ts",
-      "1996-01-02", "1996-01-02 23:59:59")
+    // a timestamp range filter prunes whole days at plan time
+    val oneDay = vs.read("t").filter(col("ts").between(
+      lit("1996-01-02").cast("timestamp"),
+      lit("1996-01-02 23:59:59").cast("timestamp")))
     assert(oneDay.count() === 100L)
-    assert(oneDay.inputFiles.length < vs.read("t").inputFiles.length)
+    val planned = PlannedScan.files(oneDay)
+    assert(planned.nonEmpty && planned.forall(_.contains("ts_day=1996-01-02")),
+      s"one day's range planned ${planned.mkString(",")}")
   }
 
   test("disjoint-day appends commit as partition deltas") {
@@ -89,9 +92,10 @@ class HiddenPartitionSpec extends AnyFunSuite {
       .forall(_.startsWith("id_bucket=")))
     assert(vs.read("t").columns.toSeq === Seq("id", "payload"))
     vs.buildBloomIndex("t", "id")
-    val hit = vs.readPointIndexed("t", "id", 1234L)
+    val hit = vs.read("t").filter(col("id") === 1234L)
     assert(hit.select("payload").as[String].collect().toSeq === Seq("p1234"))
-    assert(hit.inputFiles.length < vs.read("t").inputFiles.length)
+    assert(PlannedScan.files(hit).nonEmpty &&
+      PlannedScan.files(hit).length < vs.read("t").inputFiles.length)
   }
 
   test("truncate layout groups string prefixes; guards fire loudly") {

@@ -71,13 +71,15 @@ class RenameWidenSpec extends AnyFunSuite {
       (1 to 40).map(i => ((i - 1) / 10, i.toLong)).toDF("p", "ord"),
       "t", partitionBy = Seq("p"), statsColumns = Seq("ord"))
     vs.renameColumn("t", "ord", "order_id")
-    val pruned = vs.readWhere("t", "order_id", 4L, 4L)
+    val pruned = vs.read("t")
+      .filter(org.apache.spark.sql.functions.col("order_id") === 4L)
     // value correctness AND the prune actually happened (4 rel dirs
     // with DISJOINT ord ranges; only p=0 [1,10] intersects [4,4])
     assert(pruned.select("p", "order_id").as[(Int, Long)].collect()
       .toSeq === Seq((0, 4L)))
-    assert(pruned.inputFiles.length <
-      vs.read("t").inputFiles.length)
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.forall(_.contains("p=0")),
+      s"renamed stats failed to prune: ${planned.mkString(",")}")
   }
 
   test("rename rejections: partition column, collision, MoR keys, bad name") {

@@ -3,6 +3,7 @@ package graft.table
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -187,8 +188,7 @@ class VersionedTableStoreSpec extends AnyFunSuite {
   }
 
   test("bloom-indexed point lookup skips row groups a plain table must scan") {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.xxhash64
     val n = 200000L
     // high-cardinality key in RANDOM order: every row group's min/max
     // spans nearly the full 64-bit range, so stats cannot prove a
@@ -206,19 +206,19 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     def scanRows(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect()
       df.queryExecution.executedPlan.collectLeaves()
-        .collect { case f: FileSourceScanExec => f }
+        .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
         .map(_.metrics("numOutputRows").value).sum
     }
     val absent = 123456789L // not an xxhash64 image of 0..n-1 (p ~ n/2^64)
-    val viaBloom = scanRows(vs.readPoint("idx", "doc_id", absent))
-    val viaStats = scanRows(vs.readPoint("plain", "doc_id", absent))
+    val viaBloom = scanRows(vs.read("idx").filter(col("doc_id") === absent))
+    val viaStats = scanRows(vs.read("plain").filter(col("doc_id") === absent))
     assert(viaStats > n / 2,
       s"plain table should scan nearly everything, scanned $viaStats")
     assert(viaBloom < viaStats / 4,
       s"bloom index failed to skip row groups: $viaBloom vs $viaStats")
     // correctness: a present key still returns its row
     val k = data.select(col("doc_id")).as[Long].head()
-    assert(vs.readPoint("idx", "doc_id", k).count() === 1L)
+    assert(vs.read("idx").filter(col("doc_id") === k).count() === 1L)
   }
 
   test("end-to-end race: the losing commit throws and cleans up its staged data") {
@@ -341,34 +341,40 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     val df = Seq((1, "d1"), (9, "d1"), (100, "d2"), (110, "d2"), (1000, "d3"))
       .toDF("k", "day")
     vs.commitFull(df, "pt", Seq("day"), statsColumns = Seq("k"))
-    val pruned = vs.readWhere("pt", "k", 0, 50)
+    val pruned = vs.read("pt").filter(col("k").between(0, 50))
     // d2/d3 are disjoint from [0,50]: their files never enter the scan
-    assert(pruned.inputFiles.nonEmpty)
-    assert(pruned.inputFiles.forall(_.contains("day=d1")),
-      s"stats failed to skip: ${pruned.inputFiles.mkString(",")}")
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty)
+    assert(planned.forall(_.contains("day=d1")),
+      s"stats failed to skip: ${planned.mkString(",")}")
     assert(pruned.as[(Int, String)].collect().toSeq.sorted === Seq((1, "d1"), (9, "d1")))
     // boundary overlap keeps the partition (inclusive ranges)
-    assert(vs.readWhere("pt", "k", 50, 100).as[(Int, String)].collect().toSeq ===
-      Seq((100, "d2")))
+    val edge = vs.read("pt").filter(col("k").between(50, 100))
+    assert(edge.as[(Int, String)].collect().toSeq === Seq((100, "d2")))
+    assert(PlannedScan.files(edge).nonEmpty &&
+      PlannedScan.files(edge).forall(_.contains("day=d2")))
     // a commit WITHOUT stats scans everything but filters identically
     val vn = fresh()
     vn.commitFull(df, "pt", Seq("day"))
-    val unpruned = vn.readWhere("pt", "k", 0, 50)
-    assert(unpruned.inputFiles.exists(_.contains("day=d3")))
+    val unpruned = vn.read("pt").filter(col("k").between(0, 50))
+    assert(PlannedScan.files(unpruned).exists(_.contains("day=d3")))
     assert(unpruned.as[(Int, String)].collect().toSeq.sorted === Seq((1, "d1"), (9, "d1")))
   }
 
-  test("readWhere on a non-integer column fails loudly at plan time") {
+  test("string stats prune string bounds and never integer ones") {
     val vs = fresh()
     vs.commitFull(Seq((1, "x", "d1"), (2, "y", "d2")).toDF("k", "v", "day"),
       "pt", Seq("day"), statsColumns = Seq("v")) // string stats: recordable
-    // ...but range-reading a string column would hit ANSI cast errors
-    // mid-scan; the store rejects it with a clear message instead
-    val e = intercept[IllegalArgumentException] { vs.readWhere("pt", "v", 0, 10) }
-    assert(e.getMessage.contains("integer-family"))
-    // the integer column still range-reads fine alongside string stats
-    assert(vs.readWhere("pt", "k", 2, 5).as[(Int, String, String)]
-      .collect().toSeq === Seq((2, "y", "d2")))
+    // a string bound skips by the string stats
+    val byV = vs.read("pt").filter(col("v") === "y")
+    assert(PlannedScan.files(byV).nonEmpty &&
+      PlannedScan.files(byV).forall(_.contains("day=d2")))
+    assert(byV.as[(Int, String, String)].collect().toSeq === Seq((2, "y", "d2")))
+    // the integer column (no stats) still range-reads fine alongside
+    // the string stats, and scans every partition
+    val byK = vs.read("pt").filter(col("k").between(2, 5))
+    assert(byK.as[(Int, String, String)].collect().toSeq === Seq((2, "y", "d2")))
+    assert(PlannedScan.files(byK).exists(_.contains("day=d1")))
   }
 
   test("statsFor: MERGE-path writes record manifest stats without explicit args") {
@@ -381,15 +387,15 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     UpsertWriter.upsertAll(vs, "t",
       Seq((200, "c", "d3")).toDF("k", "v", "day"),
       Seq("k"), partitionBy = Seq("day"))
-    val pruned = vs.readWhere("t", "k", 0, 50)
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.forall(_.contains("day=d1")),
-      s"MERGE commits recorded no stats: ${pruned.inputFiles.mkString(",")}")
+    val pruned = vs.read("t").filter(col("k").between(0, 50))
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.forall(_.contains("day=d1")),
+      s"MERGE commits recorded no stats: ${planned.mkString(",")}")
     assert(pruned.select("k", "v").as[(Int, String)].collect().toSeq === Seq((1, "a")))
   }
 
   test("readWhereDate skips partitions by ISO date stats; conservative without stats") {
-    import org.apache.spark.sql.functions.{col, to_date}
+    import org.apache.spark.sql.functions.{lit, to_date}
     val vs = fresh()
     val df = Seq(
       (1, "2024-01-05", "m1"), (2, "2024-01-20", "m1"),
@@ -397,25 +403,25 @@ class VersionedTableStoreSpec extends AnyFunSuite {
       .toDF("k", "d", "mo")
       .withColumn("d", to_date(col("d")))
     vs.commitFull(df, "dt", Seq("mo"), statsColumns = Seq("d"))
-    val pruned = vs.readWhereDate("dt", "d", "2024-01-01", "2024-01-31")
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.forall(_.contains("mo=m1")),
-      s"date stats failed to skip: ${pruned.inputFiles.mkString(",")}")
+    def january(t: String) = vs.read(t).filter(col("d").between(
+      lit("2024-01-01").cast("date"), lit("2024-01-31").cast("date")))
+    val pruned = january("dt")
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.forall(_.contains("mo=m1")),
+      s"date stats failed to skip: ${planned.mkString(",")}")
     assert(pruned.select("k").as[Int].collect().sorted.toSeq === Seq(1, 2))
     // boundary day is inclusive and keeps its partition
-    assert(vs.readWhereDate("dt", "d", "2024-02-10", "2024-02-10")
-      .select("k").as[Int].collect().toSeq === Seq(3))
+    val day = vs.read("dt").filter(col("d") === lit("2024-02-10").cast("date"))
+    assert(day.select("k").as[Int].collect().toSeq === Seq(3))
+    assert(PlannedScan.files(day).nonEmpty &&
+      PlannedScan.files(day).forall(_.contains("mo=m2")))
     // without stats: everything scans, the filter still applies
     val vn = fresh()
     vn.commitFull(df, "dt", Seq("mo"))
-    val unpruned = vn.readWhereDate("dt", "d", "2024-01-01", "2024-01-31")
-    assert(unpruned.inputFiles.exists(_.contains("mo=m3")))
+    val unpruned = vn.read("dt").filter(col("d").between(
+      lit("2024-01-01").cast("date"), lit("2024-01-31").cast("date")))
+    assert(PlannedScan.files(unpruned).exists(_.contains("mo=m3")))
     assert(unpruned.select("k").as[Int].collect().sorted.toSeq === Seq(1, 2))
-    // malformed bound / non-date column fail loudly at plan time
-    intercept[IllegalArgumentException] {
-      vs.readWhereDate("dt", "d", "01/05/2024", "2024-01-31") }
-    intercept[IllegalArgumentException] {
-      vs.readWhereDate("dt", "k", "2024-01-01", "2024-01-31") }
   }
 
   test("readWhereAll prunes on the conjunction of column ranges") {
@@ -425,9 +431,11 @@ class VersionedTableStoreSpec extends AnyFunSuite {
         (8, 50, "d2"), (100, 5, "d3")).toDF("k", "t", "day"),
       "pt", Seq("day"), statsColumns = Seq("k", "t"))
     // k in [0,50] keeps d1+d2; ADDING t in [0,10] prunes d2 as well
-    val both = vs.readWhereAll("pt", Map("k" -> ((0L, 50L)), "t" -> ((0L, 10L))))
-    assert(both.inputFiles.nonEmpty && both.inputFiles.forall(_.contains("day=d1")),
-      s"conjunction failed to prune: ${both.inputFiles.mkString(",")}")
+    val both = vs.read("pt")
+      .filter(col("k").between(0, 50) && col("t").between(0, 10))
+    val planned = PlannedScan.files(both)
+    assert(planned.nonEmpty && planned.forall(_.contains("day=d1")),
+      s"conjunction failed to prune: ${planned.mkString(",")}")
     assert(both.select("k", "t").as[(Int, Int)].collect().toSeq.sorted ===
       Seq((1, 5), (9, 5)))
   }
@@ -439,10 +447,10 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     vs.commitPartitions(Seq((200, "d3")).toDF("k", "day"),
       "pt", Seq("day"), statsColumns = Seq("k"))
     vs.compact("pt")
-    val pruned = vs.readWhere("pt", "k", 0, 50)
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.forall(_.contains("day=d1")),
-      s"compaction lost the manifest stats: ${pruned.inputFiles.mkString(",")}")
+    val pruned = vs.read("pt").filter(col("k").between(0, 50))
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.forall(_.contains("day=d1")),
+      s"compaction lost the manifest stats: ${planned.mkString(",")}")
     assert(pruned.as[(Int, String)].collect().toSeq === Seq((1, "d1")))
   }
 
@@ -453,13 +461,16 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     // rewrite d2 only; d1's stats must survive via the parent manifest
     vs.commitPartitions(Seq((200, "d2")).toDF("k", "day"),
       "pt", Seq("day"), statsColumns = Seq("k"))
-    val onlyD1 = vs.readWhere("pt", "k", 0, 50)
-    assert(onlyD1.inputFiles.forall(_.contains("day=d1")))
+    def range(lo: Int, hi: Int) = vs.read("pt").filter(col("k").between(lo, hi))
+    val onlyD1 = range(0, 50)
+    assert(PlannedScan.files(onlyD1).nonEmpty &&
+      PlannedScan.files(onlyD1).forall(_.contains("day=d1")))
     assert(onlyD1.as[(Int, String)].collect().toSeq === Seq((1, "d1")))
     // the rewritten partition's NEW stats are live: old d2 max (100)
     // no longer matches, new min (200) does
-    assert(vs.readWhere("pt", "k", 90, 110).count() === 0L)
-    assert(vs.readWhere("pt", "k", 150, 250).as[(Int, String)].collect().toSeq ===
+    assert(range(90, 110).count() === 0L)
+    assert(PlannedScan.files(range(90, 110)).isEmpty)
+    assert(range(150, 250).as[(Int, String)].collect().toSeq ===
       Seq((200, "d2")))
   }
 
@@ -492,6 +503,24 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     assert(vs.versionAsOf("t", 99999L) === 3L)
     // before the first commit: loud failure, not an empty frame
     intercept[NoSuchElementException] { vs.versionAsOf("t", 999L) }
+    def asOf(ts: Long) = vs.readAsOf("t", ts).as[(Int, Int)].collect().toSeq
+    // a staged (WAP) snapshot is not the table's history until published
+    now = 4000L
+    vs.stageFull(Seq((1, 99)).toDF("k", "v"), "t", "audit-1")
+    assert(vs.versionAsOf("t", 4500L) === 3L)
+    assert(asOf(4500L) === Seq((1, 30)))
+    // neither is a branch commit (nor the branch's fork manifest)
+    now = 5000L
+    vs.createBranch("t", "dev")
+    now = 6000L
+    vs.commitFull(Seq((1, 77)).toDF("k", "v"), "t", branch = "dev")
+    assert(vs.versionAsOf("t", 99999L) === 3L)
+    assert(asOf(99999L) === Seq((1, 30)))
+    // publishing lands a new main version, which then resolves
+    now = 7000L
+    val pub = vs.publishStaged("t", "audit-1")
+    assert(vs.versionAsOf("t", 99999L) === pub)
+    assert(asOf(99999L) === Seq((1, 99)))
   }
 
   test("commitPartitionsReplacing drops explicitly-listed partitions that receive no rows") {
@@ -842,10 +871,9 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     assert(filesIn("day=d2").size === 1)
     assert(filesIn("day=d1") === d1Before)
     // stats carried through the repack: a k-range read still prunes
-    val pruned = vs.readWhere("pt", "k", 1, 1)
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.forall(_.contains("day=d1")),
-      s"repack lost pruning stats: ${pruned.inputFiles.mkString(",")}")
+    val pruned = PlannedScan.files(vs.read("pt").filter(col("k") === 1))
+    assert(pruned.nonEmpty && pruned.forall(_.contains("day=d1")),
+      s"repack lost pruning stats: ${pruned.mkString(",")}")
     // second run: everything already packed -- no-op, no new snapshot
     assert(vs.optimizeSmallFiles("pt") === v)
     assert(vs.currentVersion("pt") === v)
@@ -898,7 +926,9 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     // the table keeps committing and reading; integer stats still prune
     vs.commitFull(evil.filter($"k" === 1), "t", statsColumns = Seq("v", "k"))
     assert(vs.versions("t") === Seq(1L, 2L))
-    assert(vs.readWhere("t", "k", 0, 10).count() === 1L)
+    val k = vs.read("t").filter(col("k").between(0, 10))
+    assert(k.count() === 1L)
+    assert(PlannedScan.files(k).size === 1)
   }
 
   test("deleteWhere: copy-on-write per partition, emptied partitions leave the manifest") {
@@ -924,10 +954,10 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     assert(vs.readVersion("dt", 1).count() === 5L)
     // stats: inherited for d1 (still prunes to d1 alone), recomputed
     // for the rewritten d2 (k=4 now its only row -> prunes to d2)
-    assert(vs.readWhere("dt", "k", 1, 2).inputFiles.nonEmpty &&
-      vs.readWhere("dt", "k", 1, 2).inputFiles.forall(_.contains("day=d1")))
-    assert(vs.readWhere("dt", "k", 4, 4).inputFiles.nonEmpty &&
-      vs.readWhere("dt", "k", 4, 4).inputFiles.forall(_.contains("day=d2")))
+    val k12 = PlannedScan.files(vs.read("dt").filter(col("k").between(1, 2)))
+    assert(k12.nonEmpty && k12.forall(_.contains("day=d1")))
+    val k4 = PlannedScan.files(vs.read("dt").filter(col("k") === 4))
+    assert(k4.nonEmpty && k4.forall(_.contains("day=d2")))
     // no-op delete: nothing matches, no new snapshot
     val vBefore = vs.currentVersion("dt")
     vs.deleteWhere("dt", col("x") > 1000)
@@ -976,7 +1006,8 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     // pre-update snapshot intact; rewritten stats live (x now 220-330)
     assert(vs.readVersion("ut", 1).select("x").as[Int].collect().sorted.toSeq ===
       Seq(10, 20, 30))
-    assert(vs.readWhere("ut", "x", 0, 50).inputFiles.forall(_.contains("day=d1")))
+    val x = PlannedScan.files(vs.read("ut").filter(col("x").between(0, 50)))
+    assert(x.nonEmpty && x.forall(_.contains("day=d1")))
     // unknown column fails loudly; plain-store default path agrees
     intercept[IllegalArgumentException] {
       vs.updateWhere("ut", col("k") === 1, Map("nope" -> col("x"))) }
@@ -1011,10 +1042,11 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     assert(vs.read("ct").select("k").as[Int].collect().sorted.toSeq ===
       (0 until 1000).toSeq)
     // a narrow range now touches 1-2 of 8 bucket dirs, not the table
-    val pruned = vs.readWhere("ct", "k", 10, 20)
+    val pruned = vs.read("ct").filter(col("k").between(10, 20))
     val allFiles = vs.read("ct").inputFiles.length
-    assert(pruned.inputFiles.nonEmpty && pruned.inputFiles.length < allFiles / 2,
-      s"clustered scan read ${pruned.inputFiles.length} of $allFiles files")
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.length < allFiles / 2,
+      s"clustered scan read ${planned.length} of $allFiles files")
     assert(pruned.select("k").as[Int].collect().sorted.toSeq === (10 to 20).toSeq)
     // layout evolution: v1 (unpartitioned) still reads and rolls back
     assert(vs.readVersion("ct", 1).columns.toSeq.sorted === Seq("k", "v"))
@@ -1048,17 +1080,17 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     assert(cells === 16L, s"expected 16 z-cells, got $cells")
     // a corner query (both columns constrained to the low quartile)
     // touches ~1 of 16 cells; assert strictly fewer files than half
-    val pruned = vs.readWhereAll("zt",
-      Map("x" -> (0L, 10L), "y" -> (0L, 10L)))
+    val pruned = vs.read("zt")
+      .filter(col("x").between(0, 10) && col("y").between(0, 10))
     val allFiles = vs.read("zt").inputFiles.length
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.length < allFiles / 4,
-      s"z-clustered corner scan read ${pruned.inputFiles.length} of $allFiles files")
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.length < allFiles / 4,
+      s"z-clustered corner scan read ${planned.length} of $allFiles files")
     // and BOTH single-column predicates prune too -- the property 1-D
     // clustering cannot give
     for (c <- Seq("x", "y")) {
-      val one = vs.readWhere("zt", c, 0, 10)
-      assert(one.inputFiles.length < allFiles,
+      val one = vs.read("zt").filter(col(c).between(0, 10))
+      assert(PlannedScan.files(one).length < allFiles,
         s"$c-only predicate pruned nothing")
       assert(one.select(col(c)).as[Int].collect().forall(_ <= 10))
     }
@@ -1091,24 +1123,25 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     val allFiles = vs.read("zs").inputFiles.length
     // a low-alphabet slice touches only the cells whose sym-rank bits
     // are low: strictly fewer files than the table
-    val pruned = vs.readWhereString("zs", "sym", "TK_A", "TK_F")
-    assert(pruned.inputFiles.nonEmpty && pruned.inputFiles.length < allFiles,
-      s"string predicate pruned nothing (${pruned.inputFiles.length}/$allFiles)")
+    val pruned = vs.read("zs").filter(col("sym").between("TK_A", "TK_F"))
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.length < allFiles,
+      s"string predicate pruned nothing (${planned.length}/$allFiles)")
     val expect = df.filter(col("sym") >= "TK_A" && col("sym") <= "TK_F")
       .select("id").as[Int].collect().sorted.toSeq
     assert(pruned.select("id").as[Int].collect().sorted.toSeq === expect)
     // the numeric co-dimension still prunes too (the z property)
-    val both = vs.readWhere("zs", "v", 0, 20)
-    assert(both.inputFiles.length < allFiles)
+    val both = vs.read("zs").filter(col("v").between(0, 20))
+    assert(PlannedScan.files(both).length < allFiles)
   }
 
   test("manifest growth bound: 10k partitions parse fast, prune before any listing") {
     // the growth surface is the MANIFEST (one dir line + stat lines per
     // partition rel): commit a real one-partition table, then CAS a
     // synthetic head whose mapping carries 10k rels -- 9,999 of them
-    // with stats disjoint from the probe, so readWhereAll must drop
-    // them at the manifest level BEFORE any file listing (their data
-    // paths do not exist; touching them would throw PATH_NOT_FOUND)
+    // with stats disjoint from the probe, so a filtered read must drop
+    // them from the plan BEFORE any file listing (their data paths do
+    // not exist; listing 10k paths would take a parallel listing job)
     val vs = fresh()
     val df = Seq((1, "d0"), (5, "d0")).toDF("k", "day")
     vs.commitFull(df, "big", Seq("day"), statsColumns = Seq("k"))
@@ -1124,11 +1157,15 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     assert(vs.versionsMapping("big").size === 10000)
     // probe hits only the real partition: 9,999 fake rels pruned from
     // the plan without listing their (nonexistent) paths
-    val pruned = vs.readWhereAll("big", Map("k" -> ((0L, 10L))))
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.forall(_.contains("day=d0")))
+    val listingJobs =
+      org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT
+    val jobsBefore = listingJobs.getCount
+    val pruned = vs.read("big").filter(col("k").between(0, 10))
+    val planned = PlannedScan.files(pruned)
+    assert(planned.nonEmpty && planned.forall(_.contains("day=d0")))
     assert(pruned.as[(Int, String)].collect().toSeq.sorted ===
       Seq((1, "d0"), (5, "d0")))
+    assert(listingJobs.getCount === jobsBefore, "pruned rels were listed")
     val elapsed = (System.nanoTime() - t0) / 1e9
     // commit + parse + prune + scan of a 10k-partition manifest stays
     // interactive; a super-linear manifest path would blow past this
@@ -1145,7 +1182,7 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     val vs = fresh()
     // a non-deterministic input: every evaluation draws fresh values.
     // Stats computed from a SECOND evaluation of this df would
-    // describe rows that were never written, and readWhere could
+    // describe rows that were never written, and stats skipping could
     // prune partitions holding matching rows.
     val nd = spark.range(0, 200).toDF("id")
       .withColumn("day", (col("id") % 4).cast("string"))
@@ -1158,9 +1195,9 @@ class VersionedTableStoreSpec extends AnyFunSuite {
     val probes = written.values.toSeq.sorted.take(5) ++
       written.values.toSeq.sorted.takeRight(5)
     probes.foreach { v =>
-      val got = vs.readWhere("ndt", "v", v, v).count()
+      val got = vs.read("ndt").filter(col("v") === v).count()
       val expect = written.values.count(_ == v).toLong
-      assert(got === expect, s"readWhere($v,$v) pruned away written rows")
+      assert(got === expect, s"filter(v === $v) pruned away written rows")
     }
   }
 
